@@ -43,8 +43,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.caching import MemoSlots, release_local_checkpoint
+from ..functions.frames import local_frame
 from ..functions.text import word_ngrams, words
-from ..functions.vectors import dot_unrolled, norm_unrolled, to_double_array
+from ..functions.vectors import (
+    dot_unrolled,
+    norm_unrolled,
+    to_double_array,
+    vector_means,
+)
 from ..sources.tables import fan_out
 
 NGRAM_N = 3
@@ -2909,11 +2915,8 @@ def semdedup(
     # argmin map per consumer
     assign = kmeans_cells(t).localCheckpoint(eager=False)
     m = emb.join(assign, "vec_id")
-    cent = m.groupBy("cell").agg(
-        F.array(
-            *[F.avg(F.element_at("v", i)) for i in range(1, DIM + 1)]
-        ).alias("cv")
-    )
+    schema, rows = vector_means(m, "cell", "v", DIM)
+    cent = local_frame(emb.sparkSession, rows, schema)
     from ..functions.vectors import dot, norm
 
     with_c = m.join(F.broadcast(cent), "cell").select(
@@ -2926,9 +2929,9 @@ def semdedup(
         ).alias("cent_cos"),
     )
     # Cell sizes for the cap: ≤ n_cells rows, always broadcast.  Reusing
-    # the `assign` lineage re-runs only the final (checkpointed-centroid
-    # × embeddings) assignment map — kmeans_cells localCheckpoints every
-    # iteration's centroids, so Lloyd's never re-trains here.
+    # the `assign` lineage re-runs only the final (local-centroid ×
+    # embeddings) assignment map — kmeans_cells collects every round's
+    # centroids to the driver, so Lloyd's never re-trains here.
     sizes = assign.groupBy("cell").agg(F.count(F.lit(1)).alias("bn"))
     tiled = (
         with_c.join(F.broadcast(sizes), "cell")
@@ -3386,18 +3389,9 @@ def semdedup_quantizer(t: dict[str, DataFrame]) -> dict:
     emb = fan_out(t["embeddings"]).select(
         "vec_id", to_double_array("embedding").alias("v")
     )
-    score = (
-        emb.join(assign, "vec_id")
-        .groupBy("cell")
-        .agg(
-            F.array(
-                *[F.avg(F.element_at("v", i)) for i in range(1, DIM + 1)]
-            ).alias("cv")
-        )
-    )
     return {
         "assign": [(r["cell"], list(r["cv"])) for r in cent.collect()],
-        "score": [(r["cell"], list(r["cv"])) for r in score.collect()],
+        "score": vector_means(emb.join(assign, "vec_id"), "cell", "v", DIM)[1],
     }
 
 

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.caching import count_memo, release_local_checkpoint
+from ..functions.frames import local_frame
 from ..functions.hashing import hex_sign
 # hot scan paths use ONLY the unrolled forms: the HOF dot/norm evaluate
 # interpreted per row (per-row array allocation), the flat sums compile
@@ -38,6 +39,7 @@ from ..functions.vectors import (
     norm_unrolled,
     sqdist_unrolled,
     to_double_array,
+    vector_means,
 )
 from ..sources.tables import fan_out
 
@@ -392,9 +394,35 @@ ANN_TOPK_LSH_ORACLE = _lsh_oracle()
 KMEANS_ITER = 2
 
 
-def _assign_cells(emb: DataFrame, cent: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment as a ZERO-SHUFFLE map pass:
-    centroids collapse to a single-row array (in-plan, broadcast), and
+def _cents_frame(spark, schema: T.StructType, rows) -> DataFrame:
+    """A driver-side centroid table ``(schema, rows)`` (key, cv) as the
+    ONE-row frame :func:`_assign_cells` broadcasts: column ``cents`` =
+    ``array<struct<cell, cv>>``, built through :func:`local_frame`, so
+    no job runs to gather the centroids before each use."""
+    cell = T.StructType([T.StructField("cell", schema[0].dataType), schema["cv"]])
+    return local_frame(
+        spark,
+        [(list(rows),)],
+        T.StructType([T.StructField("cents", T.ArrayType(cell))]),
+    )
+
+
+# argmin over the broadcast ``cents`` array, rendered as ONE SQL
+# expression: the same tree through the column API (``transform`` /
+# ``zip_with`` / ``aggregate`` with Python lambdas) costs ~60 py4j round
+# trips, measured ~0.14 s of driver time per assignment on a 4-core
+# host, three assignments per ``kmeans_cells``
+_NEAREST_CELL = (
+    "array_min(transform(cents, c -> named_struct("
+    "'dist', round(aggregate(zip_with(v, c.cv, (x, cc) -> (x - cc) * (x - cc)),"
+    " 0.0D, (acc, x) -> acc + x), 6),"
+    " 'cell', c.cell))).cell"
+)
+
+
+def _assign_cells(emb: DataFrame, cents: DataFrame) -> DataFrame:
+    """Nearest-centroid assignment as a ZERO-SHUFFLE map pass: the
+    one-row ``cents`` frame (:func:`_cents_frame`) is broadcast, and
     the argmin is a lexicographic ``array_min`` over
     ``struct(round(dist,6), cell)`` — same deterministic tie-break as a
     (dist, cell) window, with none of its cost.
@@ -404,27 +432,8 @@ def _assign_cells(emb: DataFrame, cent: DataFrame) -> DataFrame:
     assignment must stay embarrassingly parallel — this shape is the
     one the 100 TB path needs (and it is also what makes each Lloyd's
     iteration's cost just one centroid-update groupBy)."""
-    cents_row = cent.agg(F.collect_list(F.struct("cell", "cv")).alias("cents"))
-    best = F.array_min(
-        F.transform(
-            "cents",
-            lambda c: F.struct(
-                F.round(
-                    F.aggregate(
-                        F.zip_with(
-                            F.col("v"), c["cv"], lambda x, cc: (x - cc) * (x - cc)
-                        ),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    ),
-                    6,
-                ).alias("dist"),
-                c["cell"].alias("cell"),
-            ),
-        )
-    )
-    return emb.crossJoin(F.broadcast(cents_row)).select(
-        "vec_id", "v", best["cell"].alias("cell")
+    return emb.crossJoin(F.broadcast(cents)).select(
+        "vec_id", "v", F.expr(_NEAREST_CELL).alias("cell")
     )
 
 
@@ -433,16 +442,17 @@ def kmeans_cells(t: dict[str, DataFrame]) -> DataFrame:
     algorithm with a fixed iteration budget, every step declarative.
 
     Seeds are the per-label centroids (deterministic, shared with the
-    oracle); each iteration is (1) positional-avg centroid update —
-    one aggregation, no posexplode — and (2) broadcast re-assignment.
+    oracle); each iteration is (1) a positional-avg centroid update in
+    long form, ``(cell, pos) → avg`` (:func:`vector_means`, the oracle's
+    own ``update`` shape) and (2) broadcast re-assignment.
 
-    Lineage control: each iteration's centroid table (k tiny rows) is
-    ``localCheckpoint``ed, so iteration i's plan reads (embeddings scan
-    × materialized centroids) instead of embedding iteration i−1's
-    whole assignment subtree — without this the composed plan grows
+    Lineage control: each round's centroid table (k × DIM doubles) is
+    collected to the DRIVER and re-enters the next round's plan as a
+    local relation, so iteration i's plan reads (embeddings scan ×
+    in-plan centroids) instead of embedding iteration i−1's whole
+    assignment subtree — without this the composed plan grows
     exponentially with the iteration budget (Spark ML's KMeans
-    truncates the same loop the same way). On a real cluster prefer a
-    reliable ``checkpoint`` (localCheckpoint dies with an executor).
+    truncates the same loop the same way).
 
     ``ann_topk_ivf`` consumes a pretrained quantizer; this is its
     trainer — together they close the IVF index lifecycle.
@@ -456,8 +466,8 @@ def kmeans_cells(t: dict[str, DataFrame]) -> DataFrame:
         "vec_id", to_double_array("embedding").alias("v")
     )
     schema, rows = _kmeans_train_uncached(t)
-    cent = emb.sparkSession.createDataFrame(rows, schema)
-    return _assign_cells(emb, cent).select("vec_id", "cell")
+    cents = _cents_frame(emb.sparkSession, schema, rows)
+    return _assign_cells(emb, cents).select("vec_id", "cell")
 
 
 def kmeans_model(t: dict[str, DataFrame]) -> tuple[DataFrame, DataFrame]:
@@ -479,10 +489,10 @@ def kmeans_model(t: dict[str, DataFrame]) -> tuple[DataFrame, DataFrame]:
     bit-identical to training in-line."""
     emb_raw = fan_out(t["embeddings"])
     emb = emb_raw.select("vec_id", to_double_array("embedding").alias("v"))
+    spark = emb.sparkSession
     schema, rows = _kmeans_cent_rows(t)
-    cent = emb.sparkSession.createDataFrame(rows, schema)
-    assign = _assign_cells(emb, cent)
-    return assign.select("vec_id", "cell"), cent
+    assign = _assign_cells(emb, _cents_frame(spark, schema, rows))
+    return assign.select("vec_id", "cell"), local_frame(spark, rows, schema)
 
 
 _KMEANS_MEMO: "_OrderedDict[int, tuple[DataFrame, tuple]]" = _OrderedDict()
@@ -509,35 +519,24 @@ def _kmeans_cent_rows(t: dict[str, DataFrame]):
 
 
 def _kmeans_train_uncached(t: dict[str, DataFrame]):
-    """Run the Lloyd loop and collect the final centroid table.
+    """Run the Lloyd loop and return the final centroid table as
+    ``(schema, rows)``: (cell, cv) rows sorted by cell.
 
-    Lineage control: each round's centroid table (k tiny rows) lands
-    on the DRIVER (collect + createDataFrame) instead of a
-    localCheckpoint — same truncation of the exponentially-composed
-    assignment subtree, but no executor storage blocks to leak between
-    bench repeats (the r12 within-sweep storage-growth pathology), and
-    the values are the identical doubles either way.  On a real
-    cluster prefer a reliable ``checkpoint`` only if k stops being
-    tiny."""
-    emb_raw = fan_out(t["embeddings"])
-    emb = emb_raw.select("vec_id", to_double_array("embedding").alias("v"))
+    Lineage control: each round's centroid table lands on the DRIVER
+    (:func:`vector_means` collects it) and the next round broadcasts it
+    back as a local relation (:func:`_cents_frame`) — no executor
+    storage blocks to leak between bench repeats (the r12 within-sweep
+    storage-growth pathology), no Python worker, and every round's
+    aggregate stays inside whole-stage codegen."""
+    emb = fan_out(t["embeddings"]).select(
+        "vec_id", to_double_array("embedding").alias("v")
+    )
     spark = emb.sparkSession
-    cent = _label_centroids(t).select(F.col("label").alias("cell"), "cv")
-    assign = _assign_cells(emb, cent)
-    schema = None
-    rows: list = []
+    schema, rows = _label_centroid_rows(t)
+    schema = T.StructType([T.StructField("cell", schema[0].dataType), schema["cv"]])
     for _ in range(KMEANS_ITER):
-        cent = assign.groupBy("cell").agg(
-            F.array(
-                *[F.avg(F.element_at("v", i)) for i in range(1, DIM + 1)]
-            ).alias("cv")
-        )
-        schema = cent.schema
-        rows = cent.collect()
-        cent = spark.createDataFrame(rows, schema)
-        assign = _assign_cells(emb, cent)
-    if schema is None:  # KMEANS_ITER == 0: the seed table IS the model
-        schema, rows = cent.schema, cent.collect()
+        assign = _assign_cells(emb, _cents_frame(spark, schema, rows))
+        schema, rows = vector_means(assign, "cell", "v", DIM)
     return schema, rows
 
 
@@ -858,45 +857,49 @@ assert "qrn <=" in ANN_TOPK_VECTORIZED_ORACLE  # the cap is really in place
 N_PROBE_K = 10
 
 
-def _centroids(emb_raw: DataFrame) -> DataFrame:
+def _centroids(emb_raw: DataFrame):
     """Per-label centroid vectors (the label column acts as the
-    pre-trained coarse quantizer a production IVF index would load).
+    pre-trained coarse quantizer a production IVF index would load), as
+    driver rows ``(schema, rows)``: (label, cv) sorted by label.
 
-    One aggregation with DIM positional ``avg`` states — no posexplode
-    (which would multiply the scan by DIM) and a single shuffle."""
+    Long-form ``(label, pos) → avg`` (:func:`vector_means`): the wide
+    form, DIM positional ``avg`` states in one aggregate, carries 1 key
+    + 2·DIM buffer fields — past ``spark.sql.codegen.maxFields`` (100),
+    so its ``HashAggregate`` ran outside whole-stage codegen (503 ms of
+    task time, 370 ms CPU, for 500 rows on a 4-core host)."""
     emb = emb_raw.select("label", to_double_array("embedding").alias("v"))
-    return emb.groupBy("label").agg(
-        F.array(
-            *[F.avg(F.element_at("v", i)) for i in range(1, DIM + 1)]
-        ).alias("cv")
-    )
+    return vector_means(emb, "label", "v", DIM)
 
 
 _LCENT_MEMO: "_OrderedDict[int, tuple[DataFrame, tuple]]" = _OrderedDict()
 
 
-def _label_centroids(t: dict[str, DataFrame]) -> DataFrame:
-    """:func:`_centroids` as a driver-local relation, memoized per
-    embeddings frame as plain collected rows (k × DIM doubles — the
-    "pre-trained coarse quantizer a production IVF index would LOAD"):
-    six index ops consume the identical table and each previously
-    re-ran the corpus aggregation to rebuild it.  DIM rides the key
-    (the seed table is per-dimension positional averages)."""
+def _label_centroid_rows(t: dict[str, DataFrame]):
+    """:func:`_centroids` memoized per embeddings frame as plain
+    collected rows (k × DIM doubles — the "pre-trained coarse quantizer
+    a production IVF index would LOAD"): six index ops consume the
+    identical table and each previously re-ran the corpus aggregation
+    to rebuild it.  DIM rides the key (the seed table is per-dimension
+    positional averages)."""
     key = t["embeddings"]
     k = (id(key), DIM)
     hit = _LCENT_MEMO.get(k)
     if hit is not None:
         count_memo(True)
         _LCENT_MEMO.move_to_end(k)
-        schema, rows = hit[1]
-    else:
-        count_memo(False)
-        cent = _centroids(fan_out(key))
-        schema, rows = cent.schema, cent.collect()
-        _LCENT_MEMO[k] = (key, (schema, rows))
-        while len(_LCENT_MEMO) > 4:
-            _LCENT_MEMO.popitem(last=False)
-    return key.sparkSession.createDataFrame(rows, schema)
+        return hit[1]
+    count_memo(False)
+    out = _centroids(fan_out(key))
+    _LCENT_MEMO[k] = (key, out)
+    while len(_LCENT_MEMO) > 4:
+        _LCENT_MEMO.popitem(last=False)
+    return out
+
+
+def _label_centroids(t: dict[str, DataFrame]) -> DataFrame:
+    """:func:`_label_centroid_rows` as a (label, cv) local relation."""
+    schema, rows = _label_centroid_rows(t)
+    return local_frame(t["embeddings"].sparkSession, rows, schema)
 
 
 def ann_topk_ivf(t: dict[str, DataFrame]) -> DataFrame:
@@ -912,9 +915,9 @@ def ann_topk_ivf(t: dict[str, DataFrame]) -> DataFrame:
     different quantizer.
     """
     emb_raw = fan_out(t["embeddings"])
-    cent = _label_centroids(t).select(F.col("label").alias("cell"), "cv")
     emb = emb_raw.select("vec_id", to_double_array("embedding").alias("v"))
-    cells = _assign_cells(emb, cent).withColumn("nrm", norm_unrolled(F.col("v"), DIM))
+    cents = _cents_frame(emb.sparkSession, *_label_centroid_rows(t))
+    cells = _assign_cells(emb, cents).withColumn("nrm", norm_unrolled(F.col("v"), DIM))
 
     # bounded-query contract: cap the broadcast side to the
     # corpus-derived lowest-id query set (oracle mirrors the cut)
@@ -1133,11 +1136,13 @@ def ann_topk_ivfpq(t: dict[str, DataFrame]) -> DataFrame:
     engines; per-query top-k is a WindowGroupLimit-prunable rank.
     """
     emb_raw = fan_out(t["embeddings"])
-    cent = _label_centroids(t)
     emb = emb_raw.select("vec_id", to_double_array("embedding").alias("v"))
-    cells = _assign_cells(
-        emb, cent.select(F.col("label").alias("cell"), "cv")
-    ).select("vec_id", "cell")
+    spark = emb.sparkSession
+    schema, rows = _label_centroid_rows(t)
+    cent = local_frame(spark, rows, schema)
+    cells = _assign_cells(emb, _cents_frame(spark, schema, rows)).select(
+        "vec_id", "cell"
+    )
 
     # probe list: each query's N_PROBE nearest coarse centroids (same
     # rounded euclidean + label tie-break as assignment, so probe
@@ -1340,9 +1345,11 @@ def _rpq_shared(t: dict[str, DataFrame]):
     :func:`ivfpq_design_table` computes this once and shares it across
     every grid leg."""
     emb_raw = fan_out(t["embeddings"])
-    cent = _label_centroids(t).select(F.col("label").alias("cell"), "cv")
     emb = emb_raw.select("vec_id", to_double_array("embedding").alias("v"))
-    cells = _assign_cells(emb, cent)  # (vec_id, v, cell)
+    spark = emb.sparkSession
+    schema, rows = _label_centroid_rows(t)
+    cent = local_frame(spark, rows, schema).select(F.col("label").alias("cell"), "cv")
+    cells = _assign_cells(emb, _cents_frame(spark, schema, rows))  # (vec_id, v, cell)
     rsub = (
         cells.join(F.broadcast(cent), "cell")
         .select(
@@ -1716,7 +1723,7 @@ def _bf_truth(t: dict[str, DataFrame]) -> DataFrame:
         _BF_TRUTH_MEMO[k] = (key, (schema, rows))
         while len(_BF_TRUTH_MEMO) > 4:
             _BF_TRUTH_MEMO.popitem(last=False)
-    return key.sparkSession.createDataFrame(rows, schema)
+    return local_frame(key.sparkSession, rows, schema)
 
 
 def _recall_one_row(truth: DataFrame, approx: DataFrame) -> DataFrame:

@@ -40,6 +40,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.vectors import dot_unrolled, norm_unrolled, to_double_array
 from ..operators.dedup import (
@@ -768,18 +769,21 @@ def stream_semdedup(
         EMBED_DIM,
         SEMDEDUP_CELL_CAP,
     )
-    from ..operators.similarity import _assign_cells
+    from ..operators.similarity import _assign_cells, _cents_frame
+    from ..functions.frames import local_frame
     from ..functions.vectors import dot, norm
 
     cap = cell_cap or SEMDEDUP_CELL_CAP
 
     os.makedirs(root, exist_ok=True)
-    assign_cent = spark.createDataFrame(
-        quantizer["assign"], "cell int, cv array<double>"
-    ).localCheckpoint()
-    score_cent = spark.createDataFrame(
-        quantizer["score"], "cell int, cv array<double>"
-    ).localCheckpoint()
+    cent_schema = T.StructType(
+        [
+            T.StructField("cell", T.IntegerType()),
+            T.StructField("cv", T.ArrayType(T.DoubleType())),
+        ]
+    )
+    assign_cents = _cents_frame(spark, cent_schema, quantizer["assign"])
+    score_cent = local_frame(spark, quantizer["score"], cent_schema)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         if not _begin_batch(root, checkpoint_dir, batch_id, "semdedup index"):
@@ -789,7 +793,7 @@ def stream_semdedup(
             batch_df.select(
                 "vec_id", to_double_array("embedding").alias("v")
             ),
-            assign_cent,
+            assign_cents,
         )
         new = new.join(F.broadcast(score_cent), "cell").select(
             "vec_id",

@@ -2048,3 +2048,166 @@ def test_mmr_diversity_gain_is_real(t):
     ) < 1e-9
     assert r["rel_forfeit"] >= 0.0
     assert r["diversity_gain"] > 0.0
+
+
+# --- k-means: long-form centroid updates over local relations ---------------
+
+
+def _hex(cv):
+    return tuple(None if x is None else float(x).hex() for x in cv)
+
+
+def _wide_means(frame, key):
+    """The wide per-group mean: one ``avg(element_at(v, i))`` per
+    position in a single aggregate (1 key + 128 buffer fields)."""
+    from kafka_streams_repartition_spark.operators import similarity as sim
+
+    return frame.groupBy(key).agg(
+        F.array(
+            *[F.avg(F.element_at("v", i)) for i in range(1, sim.DIM + 1)]
+        ).alias("cv")
+    )
+
+
+def _reference_lloyd(t):
+    """The earlier Lloyd loop, inline: wide ``avg`` updates, centroid
+    tables rebuilt with ``createDataFrame(rows, schema)``, and each
+    assignment gathering its centroids with a ``collect_list``
+    aggregate before a column-API argmin.  Returns ({cell: cv},
+    assignment)."""
+    from kafka_streams_repartition_spark.functions.vectors import to_double_array
+    from kafka_streams_repartition_spark.operators import similarity as sim
+    from kafka_streams_repartition_spark.sources.tables import fan_out
+
+    emb_raw = fan_out(t["embeddings"])
+    emb = emb_raw.select("vec_id", to_double_array("embedding").alias("v"))
+    spark = emb.sparkSession
+
+    def assign(cent):
+        cents = cent.agg(F.collect_list(F.struct("cell", "cv")).alias("cents"))
+        best = F.array_min(
+            F.transform(
+                "cents",
+                lambda c: F.struct(
+                    F.round(
+                        F.aggregate(
+                            F.zip_with(
+                                F.col("v"), c["cv"], lambda x, cc: (x - cc) * (x - cc)
+                            ),
+                            F.lit(0.0),
+                            lambda acc, x: acc + x,
+                        ),
+                        6,
+                    ).alias("dist"),
+                    c["cell"].alias("cell"),
+                ),
+            )
+        )
+        return emb.crossJoin(F.broadcast(cents)).select(
+            "vec_id", "v", best["cell"].alias("cell")
+        )
+
+    seed = _wide_means(
+        emb_raw.select("label", to_double_array("embedding").alias("v")), "label"
+    )
+    cent = spark.createDataFrame(seed.collect(), seed.schema).select(
+        F.col("label").alias("cell"), "cv"
+    )
+    a = assign(cent)
+    for _ in range(sim.KMEANS_ITER):
+        upd = _wide_means(a, "cell")
+        cent = spark.createDataFrame(upd.collect(), upd.schema)
+        a = assign(cent)
+    return {r["cell"]: _hex(r["cv"]) for r in cent.collect()}, a
+
+
+def test_kmeans_long_form_bit_identical_to_wide_loop(t):
+    """The Lloyd loop's long-form updates over Arrow-built local
+    relations reproduce the wide-``avg`` loop bit for bit: the trained
+    centroid doubles, the centroid frame ``kmeans_model`` hands to its
+    consumers, and both assignments."""
+    from kafka_streams_repartition_spark.operators import similarity as sim
+
+    sim._KMEANS_MEMO.clear()
+    sim._LCENT_MEMO.clear()
+    want_cent, want_assign = _reference_lloyd(t)
+    want = sorted(map(tuple, want_assign.select("vec_id", "cell").collect()))
+
+    schema, rows = sim._kmeans_train_uncached(t)
+    assert [f.name for f in schema] == ["cell", "cv"]
+    assert {c: _hex(cv) for c, cv in rows} == want_cent
+    assert sorted(map(tuple, sim.kmeans_cells(t).collect())) == want
+    assign, cent = sim.kmeans_model(t)
+    assert sorted(map(tuple, assign.collect())) == want
+    assert {r["cell"]: _hex(r["cv"]) for r in cent.collect()} == want_cent
+
+
+def test_semdedup_score_means_bit_identical_to_wide_avg(t):
+    """semdedup's per-cell member means (the frozen ``score`` table)
+    equal the wide positional ``avg`` over the same member join."""
+    from kafka_streams_repartition_spark.functions.vectors import to_double_array
+    from kafka_streams_repartition_spark.operators import similarity as sim
+    from kafka_streams_repartition_spark.sources.tables import fan_out
+
+    assign = sim.kmeans_model(t)[0]
+    emb = fan_out(t["embeddings"]).select(
+        "vec_id", to_double_array("embedding").alias("v")
+    )
+    wide = _wide_means(emb.join(assign, "vec_id"), "cell").collect()
+    got = dd.semdedup_quantizer(t)["score"]
+    assert {c: _hex(cv) for c, cv in got} == {
+        r["cell"]: _hex(r["cv"]) for r in wide
+    }
+
+
+def test_lloyd_rounds_stay_in_codegen(t, monkeypatch):
+    """Every aggregate a Lloyd round collects runs inside whole-stage
+    codegen (a ``*(n)`` marker on each ``HashAggregate`` of the final
+    plan): a 64-wide ``avg`` needs 129 fields, past
+    ``spark.sql.codegen.maxFields``, and would fall back to the
+    interpreted path."""
+    import re
+
+    from kafka_streams_repartition_spark.operators import similarity as sim
+
+    cls = type(t["embeddings"])
+    collect = cls.collect
+    plans: list[str] = []
+
+    def spy(self):
+        rows = collect(self)
+        final = self._jdf.queryExecution().executedPlan().toString()
+        plans.append(final.split("== Initial Plan ==")[0])
+        return rows
+
+    monkeypatch.setattr(cls, "collect", spy)
+    sim._LCENT_MEMO.clear()
+    sim._kmeans_train_uncached(t)
+    monkeypatch.undo()
+    aggs = [
+        ln
+        for p in plans
+        for ln in p.splitlines()
+        if re.search(r"(?<!Object)HashAggregate\(", ln)
+    ]
+    assert len(plans) == 1 + sim.KMEANS_ITER  # the seed, then one per round
+    assert aggs, "no aggregate seen in the Lloyd collects"
+    outside = [ln for ln in aggs if not re.search(r"\*\(\d+\) HashAggregate\(", ln)]
+    assert not outside, outside
+
+
+def test_kmeans_cells_warm_job_budget(spark, t):
+    """A warm ``kmeans_cells`` (seed centroids memoized) runs at most
+    11 Spark jobs end to end, counted by the DAG scheduler's job-ID
+    range: no job gathers centroids before an assignment and no Python
+    RDD rebuilds them."""
+    from kafka_streams_repartition_spark.operators import similarity as sim
+
+    def run():
+        sim.kmeans_cells(t).write.mode("overwrite").format("noop").save()
+
+    run()  # warm: seed centroids memoized
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = dag.nextJobId()
+    run()
+    assert dag.nextJobId() - j0 <= 11
