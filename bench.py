@@ -257,9 +257,7 @@ def main() -> None:
     errors: dict[str, str] = {}
     mem_start = _meminfo()
     disk_dirs = _disk_dirs(spark)
-    from kafka_streams_repartition_spark.functions.caching import (
-        memo_counters,
-    )
+    from kafka_streams_repartition_spark.functions.caching import memo_traffic
 
     # per-QUERY JVM GC hygiene (outside every timed region): each
     # repeat's lazy localCheckpoint blocks are only reclaimable after
@@ -278,7 +276,7 @@ def main() -> None:
         rep_storage: list[int | None] = []
         rep_disk: list[int | None] = []
         rep_gc: list[int | None] = []
-        memo0 = memo_counters()
+        traffic0 = memo_traffic()
         try:
             # median-of-N: robust to one lucky/unlucky run in either
             # direction (best-of-N let a single outlier set the record).
@@ -304,7 +302,13 @@ def main() -> None:
             continue
         timings[name] = round(statistics.median(samples), 3)
         raw_samples[name] = [round(s, 3) for s in samples]
-        memo1 = memo_counters()
+        # [hits, misses] per memo name this query touched (every memo
+        # registers when __spark_entry__ imports its operator module)
+        memos = {
+            m: [h - traffic0[m][0], n - traffic0[m][1]]
+            for m, (h, n) in memo_traffic().items()
+            if (h, n) != traffic0[m]
+        }
         state_track[name] = {
             "storage_mb": [
                 None if b is None else round(b / 1e6, 1) for b in rep_storage
@@ -312,8 +316,9 @@ def main() -> None:
             "blockmgr_disk_mb": [
                 None if b is None else round(b / 1e6, 1) for b in rep_disk
             ],
-            "memo_hits": memo1[0] - memo0[0],
-            "memo_misses": memo1[1] - memo0[1],
+            "memo_hits": sum(h for h, _ in memos.values()),
+            "memo_misses": sum(n for _, n in memos.values()),
+            "memos": memos,
             # in-region JVM GC ms per repeat (None if JMX unreadable)
             "gc_ms": rep_gc,
         }

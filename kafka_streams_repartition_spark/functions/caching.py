@@ -1,34 +1,47 @@
-"""Session-lifetime memoization of persisted DataFrames.
+"""Session memos: one bounded, identity-keyed memo for every shared
+artifact a query builds once and other queries reuse.
 
-Several operators memoize one ``.cache()``d derived frame per input
-frame (one grams frame per documents frame, one trained-classifier
-scored frame per documents frame) so re-entrant queries never recompute
-or leak a copy per invocation.
+A :class:`MemoSlots` is declared once per artifact at module level with
+a unique name, the function that builds the artifact, the names of the
+module constants that shape what the build computes, and a capacity.
+``memo.get(key_frame, *args)`` returns the value stored under
+``(id(key_frame), *current values of those constants)`` and calls
+``build(*args)`` on a miss.  The constant values are read from
+``build.__globals__`` at every lookup, so a runtime override of a
+shaping constant (monkeypatched, or derived from the environment) can
+never serve a value built under the old one.  Which names a build reads
+is checked, not trusted: ``tests/test_invariants.py`` walks every
+registered build, its nested code and its same-module callees, and
+fails when a public module constant it reads is missing from
+``consts``.
 
-Eviction discipline (round-9 advisor finding): the earlier
-``WeakKeyDictionary`` dropped its ENTRY when the key frame was
-garbage-collected but left the persisted blocks pinned for the rest of
-the session — many distinct input frames (test suites, multi-sf
-sessions) accumulated storage pressure on a default-heap driver.  A
-finalizer that unpersists on key COLLECTION is not the fix either: a
-consumer's derived plan can outlive the key object (``pretrain_pipeline``
-builds its grams over a transient gated frame and returns a plan that
-still references the cached relation — unpersisting at key GC forced
-the downstream plan to re-derive, doubling its scans).
+Stored values come in three kinds, and eviction treats each the way it
+was stored:
 
-:class:`MemoSlots` therefore bounds storage the other way round: a
-small fixed-capacity LRU whose RESIDENT keys are strongly referenced
-(an entry can never vanish while it is current, so downstream plans
-keep their ``InMemoryRelation``), and whose EVICTED frames are
-unpersisted at replacement time — total persisted storage per cache is
-≤ capacity copies, regardless of how many distinct input frames a
-session touches.
+- a bare DataFrame is ``.cache()``d on the miss and unpersisted when
+  evicted;
+- a tuple of DataFrames holds ``localCheckpoint`` frames the build made
+  (the MMR pool/pair frames), released when evicted;
+- anything else is a driver value (collected rows, a count) and is
+  just dropped.
+
+Capacity bounds storage: resident keys are strongly referenced (an
+entry can never vanish while it is current, so a downstream plan keeps
+its ``InMemoryRelation``, and an ``id`` can never be reused by another
+frame while its entry lives), and the least-recently-used entry is
+released at replacement time.  Neither weak keys nor a finalizer would
+do: a ``WeakKeyDictionary`` drops the entry but leaves its blocks
+pinned for the rest of the session, and unpersisting when the key is
+collected breaks consumers whose derived plan outlives the key object
+(``pretrain_pipeline`` builds its grams over a transient gated frame).
+
+Hits and misses are counted per memo name; :func:`memo_counters` sums
+them for the process and :func:`memo_traffic` reports them per name.
 """
 
 from __future__ import annotations
 
 import logging
-from collections import OrderedDict
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
@@ -40,30 +53,19 @@ _log = logging.getLogger(__name__)
 # counted unconditionally so tests can assert the failure is visible
 _release_failures = 0
 
-# process-lifetime shared-frame memo traffic (every MemoSlots instance
-# bumps these): bench.py records per-query DELTAS so a committed bench
-# artifact shows which queries rode a warm shared frame and which paid
-# the build — the mechanism behind order-dependent suite timings
-# (BENCHNOTES.md), now measured instead of inferred
-_memo_hits = 0
-_memo_misses = 0
+# every MemoSlots by name: one declaration per artifact per process
+_REGISTRY: dict[str, MemoSlots] = {}
 
 
 def memo_counters() -> tuple[int, int]:
-    """(hits, misses) across every :class:`MemoSlots` in the process."""
-    return (_memo_hits, _memo_misses)
+    """(hits, misses) summed over every registered memo."""
+    traffic = memo_traffic().values()
+    return sum(h for h, _ in traffic), sum(m for _, m in traffic)
 
 
-def count_memo(hit: bool) -> None:
-    """Manual bump for the bespoke identity-keyed memos that don't go
-    through :class:`MemoSlots` (``_KCENTER_MEMO``/``_MMR_MEMO``/
-    ``_NVEC_MEMO``) so :func:`memo_counters` sees ALL shared-frame
-    traffic."""
-    global _memo_hits, _memo_misses
-    if hit:
-        _memo_hits += 1
-    else:
-        _memo_misses += 1
+def memo_traffic() -> dict[str, tuple[int, int]]:
+    """(hits, misses) of each registered memo, by name."""
+    return {name: (m.hits, m.misses) for name, m in _REGISTRY.items()}
 
 
 def release_local_checkpoint(df: DataFrame) -> None:
@@ -117,50 +119,74 @@ def _unpersist_quietly(df: DataFrame) -> None:
         pass
 
 
+def _release(value: object) -> None:
+    if isinstance(value, DataFrame):
+        _unpersist_quietly(value)
+    elif isinstance(value, tuple):
+        for part in value:
+            if isinstance(part, DataFrame):
+                release_local_checkpoint(part)
+
+
 class MemoSlots:
-    """Capacity-bounded identity-keyed memo of persisted frames.
+    """Capacity-bounded memo of one artifact, keyed on a frame's
+    identity plus the current values of ``consts`` (see the module
+    docstring)."""
 
-    ``get_or_build(key, build)`` returns the cached frame for ``key``
-    (identity semantics — DataFrames hash by id), building and
-    ``.cache()``-ing it on first use; the least-recently-used entry is
-    unpersisted and dropped when capacity is exceeded.
-    """
-
-    def __init__(self, capacity: int = 2) -> None:
-        self._capacity = capacity
-        # key: (id(frame), *shaping-constant parts)
-        self._slots: OrderedDict[tuple, tuple[DataFrame, DataFrame]] = (
-            OrderedDict()
-        )
-
-    def get_or_build(
+    def __init__(
         self,
-        key: DataFrame,
-        build: Callable[[], DataFrame],
-        parts: tuple = (),
-    ) -> DataFrame:
-        """``parts``: optional plan-shaping constants (gram order,
-        band counts, caps) folded into the slot key next to the frame
-        identity, so a runtime override of a shaping constant can
-        never serve a frame built under the old value (the
-        ``_bf_truth`` key discipline, available to every MemoSlots
-        user)."""
-        global _memo_hits, _memo_misses
-        k = (id(key), *parts)
-        hit = self._slots.get(k)
-        if hit is not None:
-            _memo_hits += 1
-            self._slots.move_to_end(k)
-            return hit[1]
-        _memo_misses += 1
-        val = build().cache()
-        # the stored key reference keeps `key` alive while resident, so
-        # its id cannot be reused by a different frame
-        self._slots[k] = (key, val)
-        while len(self._slots) > self._capacity:
-            _, (_, old) = self._slots.popitem(last=False)
-            _unpersist_quietly(old)
-        return val
+        name: str,
+        build: Callable,
+        consts: tuple[str, ...],
+        capacity: int,
+    ) -> None:
+        if name in _REGISTRY:
+            raise ValueError(f"memo {name!r} is already registered")
+        self.name, self.build = name, build
+        self.consts, self.capacity = consts, capacity
+        self.hits = self.misses = 0
+        # key -> (key frame, value), least recently used first
+        self._slots: dict[tuple, tuple[object, object]] = {}
+        _REGISTRY[name] = self
+
+    def _key(self, key_frame: object) -> tuple:
+        g = self.build.__globals__
+        return (id(key_frame), *(g[c] for c in self.consts))
+
+    def get(self, key_frame: object, *args: object) -> object:
+        """The value for ``key_frame``, built by ``build(*args)`` on a
+        miss."""
+        k = self._key(key_frame)
+        entry = self._slots.pop(k, None)
+        if entry is not None:
+            self.hits += 1
+            self._slots[k] = entry
+            return entry[1]
+        self.misses += 1
+        value = self.build(*args)
+        if isinstance(value, DataFrame):
+            value = value.cache()
+        self._store(k, key_frame, value)
+        return value
+
+    def put(self, key_frame: object, value: object) -> None:
+        """Store a driver value a producer computed without consulting
+        the memo; counts as neither hit nor miss."""
+        k = self._key(key_frame)
+        self._slots.pop(k, None)
+        self._store(k, key_frame, value)
+
+    def _store(self, k: tuple, key_frame: object, value: object) -> None:
+        # the stored key frame keeps its id from being reused while resident
+        self._slots[k] = (key_frame, value)
+        while len(self._slots) > self.capacity:
+            _release(self._slots.pop(next(iter(self._slots)))[1])
+
+    def clear(self) -> None:
+        """Release every resident value."""
+        for _, value in self._slots.values():
+            _release(value)
+        self._slots.clear()
 
     def __len__(self) -> int:
         return len(self._slots)

@@ -36,7 +36,6 @@ from __future__ import annotations
 
 import os
 import re
-from collections import OrderedDict
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
@@ -81,20 +80,13 @@ def _doc_gram_arrays(documents: DataFrame) -> DataFrame:
 # query twice; corpus_curation re-enters dedup_minhash_lsh).  The slots
 # are capacity-bounded: evicted frames unpersist at replacement, so a
 # session touching many distinct docs frames holds ≤2 cached copies.
-_GRAMS_CACHE = MemoSlots(capacity=2)
+_GRAMS_CACHE = MemoSlots(
+    "dedup.doc_grams", _doc_gram_arrays, ("NGRAM_N",), 2
+)
 
 
 def _doc_gram_arrays_cached(documents: DataFrame) -> DataFrame:
-    return _GRAMS_CACHE.get_or_build(
-        documents, lambda: _doc_gram_arrays(documents)
-    )
-
-
-def _doc_grams(documents: DataFrame) -> DataFrame:
-    """Distinct (doc_id, gram): word 3-gram shingles, lowercased."""
-    return _doc_gram_arrays(documents).select(
-        "doc_id", F.explode("grams").alias("gram")
-    )
+    return _GRAMS_CACHE.get(documents, documents)
 
 
 _GRAMS_SQL = f"""
@@ -1087,35 +1079,37 @@ def _hash_bucket(col: F.Column) -> F.Column:
 
 RNS_NGRAM = 13  # the GPT-3 appendix-C decontamination gram order
 
+
+def _rns_doc_grams(documents: DataFrame) -> DataFrame:
+    """Distinct (doc_id, gh): md5 of each distinct RNS_NGRAM-gram."""
+    ga = fan_out(documents).select(
+        "doc_id",
+        F.array_distinct(
+            F.transform(
+                word_ngrams(words(F.col("text")), RNS_NGRAM),
+                lambda g: F.md5(g),
+            )
+        ).alias("ghs"),
+    )
+    return ga.select(
+        "doc_id", F.explode_outer("ghs").alias("gh")
+    ).filter(F.col("gh").isNotNull())
+
+
 # One cached distinct (doc_id, gh) 13-gram pair frame per documents
-# frame (the _GRAMS_CACHE discipline): repeated_ngram_scan references
-# the frame three times (recurrence rollup, per-doc verdict, per-doc
-# totals) and repeated_ngram_summary three more — without the cache
-# each reference re-ran the full tokenize + 13-gram + md5 transform
-# over the corpus text (measured: 6 text passes across the pair at
-# sf0.1 for one logical gram table).  The gram order rides the slot
-# key, so a runtime RNS_NGRAM override can never serve stale pairs.
-_RNS_DG_CACHE = MemoSlots(capacity=2)
+# frame: repeated_ngram_scan references the frame three times
+# (recurrence rollup, per-doc verdict, per-doc totals) and
+# repeated_ngram_summary three more — without the cache each reference
+# re-ran the full tokenize + 13-gram + md5 transform over the corpus
+# text (measured: 6 text passes across the pair at sf0.1 for one
+# logical gram table).
+_RNS_DG_CACHE = MemoSlots(
+    "dedup.rns_doc_grams", _rns_doc_grams, ("RNS_NGRAM",), 2
+)
 
 
 def _rns_dg(t: dict[str, DataFrame]) -> DataFrame:
-    def build() -> DataFrame:
-        ga = fan_out(t["documents"]).select(
-            "doc_id",
-            F.array_distinct(
-                F.transform(
-                    word_ngrams(words(F.col("text")), RNS_NGRAM),
-                    lambda g: F.md5(g),
-                )
-            ).alias("ghs"),
-        )
-        return ga.select(
-            "doc_id", F.explode_outer("ghs").alias("gh")
-        ).filter(F.col("gh").isNotNull())
-
-    return _RNS_DG_CACHE.get_or_build(
-        t["documents"], build, parts=(RNS_NGRAM,)
-    )
+    return _RNS_DG_CACHE.get(t["documents"], t["documents"])
 
 
 def repeated_ngram_scan(t: dict[str, DataFrame]) -> DataFrame:
@@ -1582,17 +1576,9 @@ HAMMING_QUERY_CAP = int(os.environ.get("HAMMING_QUERY_CAP", "4096"))
 # one vote per digit via the high-bit test the 16-bit fingerprint uses
 _H64_DIGITS = "md5(tok) || md5(tok || '|s2')"
 
-# one cached code table per documents frame: the 64-vote pass is the
-# expensive half of BOTH Hamming queries (index + design curve), so a
-# session running them back-to-back pays it once (the _GRAMS_CACHE
-# discipline — capacity-bounded, evicted frames unpersisted)
-_H64_CACHE = MemoSlots(capacity=2)
-
 
 def _simhash64_codes_cached(documents: DataFrame) -> DataFrame:
-    return _H64_CACHE.get_or_build(
-        documents, lambda: _simhash64_codes(fan_out(documents))
-    )
+    return _H64_CACHE.get(documents, fan_out(documents))
 
 
 def _simhash64_codes(docs: DataFrame) -> DataFrame:
@@ -1632,6 +1618,17 @@ def _simhash64_codes(docs: DataFrame) -> DataFrame:
             expr = bit if expr is None else expr + bit
         chunk_cols.append(expr.cast("long").alias(f"c{c}"))
     return base.select("doc_id", *chunk_cols)
+
+
+# one cached code table per documents frame: the 64-vote pass is the
+# expensive half of BOTH Hamming queries (index + design curve), so a
+# session running them back-to-back pays it once
+_H64_CACHE = MemoSlots(
+    "dedup.simhash64_codes",
+    _simhash64_codes,
+    ("HAMMING_BITS", "HAMMING_CHUNKS", "HAMMING_CHUNK_BITS"),
+    2,
+)
 
 
 def hamming_neighbors(t: dict[str, DataFrame]) -> DataFrame:
@@ -1992,94 +1989,57 @@ def _derived_planes_sql() -> str:
 # keeps this trade-off visible instead of silently assumed.
 
 
-# the exact bounded (lo, hi) >=-threshold truth pair set shared by the
-# three embedding-dedup acceptance gates (dedup_embedding_recall,
-# semdedup_recall, dedup_stacked_recall): identical construction in all
-# three, each previously re-running the capped query-vs-corpus scan to
-# rebuild it.  Cached + LRU-unpersisted (the MemoSlots discipline,
-# hand-rolled because the key must carry the EFFECTIVE cap/threshold so
-# a monkeypatched EMBDUP_QUERY_CAP can never serve a stale truth set)
-# rather than a collected list: the pair count is data-dependent
-# (threshold survivors), not k-bounded.  The declared dedup_embedding
-# query itself never consults the memo — it always computes fresh.
-_EMBDUP_TRUTH_CACHE: "OrderedDict[tuple, tuple[DataFrame, DataFrame]]" = (
-    OrderedDict()
-)
-
-
-def _embdup_truth_pairs(t: dict[str, DataFrame]) -> DataFrame:
-    from ..functions.caching import count_memo
-
-    key = t["embeddings"]
-    k = (id(key), EMBDUP_QUERY_CAP, EMBED_COSINE_THRESHOLD)
-    hit = _EMBDUP_TRUTH_CACHE.get(k)
-    if hit is not None:
-        count_memo(True)
-        _EMBDUP_TRUTH_CACHE.move_to_end(k)
-        return hit[1]
-    count_memo(False)
-    val = (
+def _embdup_truth(t: dict[str, DataFrame]) -> DataFrame:
+    return (
         dedup_embedding(t)
         .select(
             F.least("query_id", "cand_id").alias("lo"),
             F.greatest("query_id", "cand_id").alias("hi"),
         )
         .distinct()
-        .cache()
     )
-    _EMBDUP_TRUTH_CACHE[k] = (key, val)
-    while len(_EMBDUP_TRUTH_CACHE) > 2:
-        _, (_, old) = _EMBDUP_TRUTH_CACHE.popitem(last=False)
-        try:
-            old.unpersist(blocking=False)
-        except Exception:
-            pass
-    return val
+
+
+# the exact bounded (lo, hi) >=-threshold truth pair set shared by the
+# three embedding-dedup acceptance gates (dedup_embedding_recall,
+# semdedup_recall, dedup_stacked_recall): identical construction in all
+# three, each previously re-running the capped query-vs-corpus scan to
+# rebuild it.  A cached frame rather than a collected list: the pair
+# count is data-dependent (threshold survivors), not k-bounded.  The
+# declared dedup_embedding query itself never consults the memo — it
+# always computes fresh.
+_EMBDUP_TRUTH_CACHE = MemoSlots(
+    "dedup.embdup_truth",
+    _embdup_truth,
+    ("EMBDUP_QUERY_CAP", "EMBED_COSINE_THRESHOLD", "EMBED_DIM", "QUERY_MOD"),
+    2,
+)
+
+
+def _embdup_truth_pairs(t: dict[str, DataFrame]) -> DataFrame:
+    return _EMBDUP_TRUTH_CACHE.get(t["embeddings"], t)
 
 
 # The two verified near-dup PAIR FAMILIES are consumed all over the
 # module (clusters/CC, quality-aware keepers, stacking, the recall
 # gates, the selection/text pipelines' loser sets) and each consumer
 # previously re-ran the full banded index build.  Shared-intermediate
-# memos (cache + LRU-unpersist, keys carry the plan-shaping knobs so a
-# monkeypatched constant can never serve a stale frame); the declared
-# dedup_minhash_lsh / dedup_embedding_lsh queries never consult them.
-_MINHASH_PAIRS_CACHE = MemoSlots(capacity=2)
-
-
-def _minhash_pairs(t: dict[str, DataFrame]) -> DataFrame:
-    return _MINHASH_PAIRS_CACHE.get_or_build(
-        t["documents"],
-        lambda: dedup_minhash_lsh(t),
-        parts=(NGRAM_N, MINHASH_SEEDS, MINHASH_BANDS, JACCARD_THRESHOLD),
-    )
-
-
-_EMBLSH_PAIRS_CACHE: "OrderedDict[tuple, tuple[DataFrame, DataFrame]]" = (
-    OrderedDict()
+# memos; the declared dedup_minhash_lsh / dedup_embedding_lsh queries
+# never consult them.
+_MINHASH_PAIRS_CACHE = MemoSlots(
+    "dedup.minhash_pairs",
+    dedup_minhash_lsh,
+    ("JACCARD_THRESHOLD", "MINHASH_BANDS", "MINHASH_SEEDS", "NGRAM_N"),
+    2,
 )
 
 
-def _emblsh_pairs(t: dict[str, DataFrame]) -> DataFrame:
-    from ..functions.caching import count_memo
+def _minhash_pairs(t: dict[str, DataFrame]) -> DataFrame:
+    return _MINHASH_PAIRS_CACHE.get(t["documents"], t)
 
-    key = t["embeddings"]
-    k = (id(key), derived_band_planes(_emb_n_vecs(t)), EMBDUP_BUCKET_CAP)
-    hit = _EMBLSH_PAIRS_CACHE.get(k)
-    if hit is not None:
-        count_memo(True)
-        _EMBLSH_PAIRS_CACHE.move_to_end(k)
-        return hit[1]
-    count_memo(False)
-    val = dedup_embedding_lsh(t).cache()
-    _EMBLSH_PAIRS_CACHE[k] = (key, val)
-    while len(_EMBLSH_PAIRS_CACHE) > 2:
-        _, (_, old) = _EMBLSH_PAIRS_CACHE.popitem(last=False)
-        try:
-            old.unpersist(blocking=False)
-        except Exception:
-            pass
-    return val
+
+def _emblsh_pairs(t: dict[str, DataFrame]) -> DataFrame:
+    return _EMBLSH_PAIRS_CACHE.get(t["embeddings"], t)
 
 
 def _emb_n_vecs(t: dict[str, DataFrame]) -> int:
@@ -2293,6 +2253,22 @@ def dedup_embedding_lsh(
         .applyInPandas(verify, "doc_a long, doc_b long, cosine double")
         .distinct()
     )
+
+
+_EMBLSH_PAIRS_CACHE = MemoSlots(
+    "dedup.emblsh_pairs",
+    dedup_embedding_lsh,
+    (
+        "EMBDUP_BANDS",
+        "EMBDUP_BUCKET_CAP",
+        "EMBDUP_PLANE_MAX",
+        "EMBDUP_PLANE_MIN",
+        "EMBDUP_PLANE_SCALE",
+        "EMBED_COSINE_THRESHOLD",
+        "EMBED_DIM",
+    ),
+    2,
+)
 
 
 def _embdup_oracle() -> str:

@@ -395,20 +395,8 @@ LOGREG_LR = 6.0
 BIAS_BUCKET = -1
 
 
-# One cached scored frame per documents frame (the loader memoizes that
-# per (session, sf_dir)): quality_logreg, quality_auc and
-# quality_calibration all read the SAME trained classifier's output, and
-# retraining the 6-round GD once per gate tripled the family's bench
-# cost for identical rows — the _GRAMS_CACHE discipline applied to the
-# model artifact.  Capacity-bounded slots: evicted frames unpersist at
-# replacement, so many distinct docs frames hold ≤2 cached copies.
-_LOGREG_CACHE = MemoSlots(capacity=2)
-
-
 def _quality_scored_cached(t: dict[str, DataFrame]) -> DataFrame:
-    return _LOGREG_CACHE.get_or_build(
-        t["documents"], lambda: quality_logreg(t)
-    )
+    return _LOGREG_CACHE.get(t["documents"], t)
 
 
 def quality_logreg(t: dict[str, DataFrame]) -> DataFrame:
@@ -563,6 +551,19 @@ def quality_logreg(t: dict[str, DataFrame]) -> DataFrame:
         (F.col("prob") >= 0.5).alias("pred"),
         ((F.col("prob") >= 0.5) == (F.col("label") == 1)).alias("correct"),
     )
+
+
+# One cached scored frame per documents frame (the loader memoizes that
+# per (session, sf_dir)): quality_logreg, quality_auc and
+# quality_calibration all read the SAME trained classifier's output, and
+# retraining the 6-round GD once per gate tripled the family's bench
+# cost for identical rows.
+_LOGREG_CACHE = MemoSlots(
+    "selection.quality_scored",
+    quality_logreg,
+    ("BIAS_BUCKET", "LOGREG_BUCKETS", "LOGREG_LR", "LOGREG_ROUNDS"),
+    2,
+)
 
 
 def _logreg_oracle() -> str:
@@ -2164,14 +2165,31 @@ FROM b2 CROSS JOIN z
 RHO_HOLDOUT_MOD = 5  # ~20% of docs form the irreducible-loss holdout
 RHO_TOP_N = 100  # selected batch size
 
-# One cached (doc, term, tf, split) frame per documents frame: the
-# round-10 body localCheckpoint()ed this frame per INVOCATION and never
-# released it, so repeated calls in one session (test suites, multi-sf
-# benches) accumulated pinned executor storage — exactly the retention
-# pattern MemoSlots exists to bound (r10 advisor finding).  cache()
-# gives the same compute-once sharing across the four consumers below;
-# eviction unpersists at replacement, so ≤2 copies survive a session.
-_RHO_TF_CACHE = MemoSlots(capacity=2)
+
+def _rho_tf(docs: DataFrame) -> DataFrame:
+    """(doc_id, term, tf, holdout): one tokenize pass over the corpus."""
+    toks = (
+        fan_out(docs)
+        .select("doc_id", F.explode_outer(words(F.col("text"))).alias("term"))
+        .filter(F.col("term").isNotNull())
+    )
+    return (
+        toks.groupBy("doc_id", "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+        .withColumn(
+            "holdout",
+            _md5_long(F.col("doc_id").cast("string")) % RHO_HOLDOUT_MOD == 0,
+        )
+    )
+
+
+# One cached (doc, term, tf, split) frame per documents frame, shared
+# by the four consumers in rho_loss_select: a localCheckpoint per
+# invocation was never released, so repeated calls in one session (test
+# suites, multi-sf benches) accumulated pinned executor storage.
+_RHO_TF_CACHE = MemoSlots(
+    "selection.rho_tf", _rho_tf, ("RHO_HOLDOUT_MOD",), 2
+)
 
 
 def rho_loss_select(t: dict[str, DataFrame]) -> DataFrame:
@@ -2203,27 +2221,7 @@ def rho_loss_select(t: dict[str, DataFrame]) -> DataFrame:
     orderBy+limit the optimizer plans as TakeOrderedAndProject —
     map-side top-N per task, never a global sort materialization.
     """
-    docs = t["documents"]
-
-    def _build_tf() -> DataFrame:
-        toks = (
-            fan_out(docs)
-            .select(
-                "doc_id", F.explode_outer(words(F.col("text"))).alias("term")
-            )
-            .filter(F.col("term").isNotNull())
-        )
-        return (
-            toks.groupBy("doc_id", "term")
-            .agg(F.count(F.lit(1)).alias("tf"))
-            .withColumn(
-                "holdout",
-                _md5_long(F.col("doc_id").cast("string")) % RHO_HOLDOUT_MOD
-                == 0,
-            )
-        )
-
-    tf = _RHO_TF_CACHE.get_or_build(docs, _build_tf)
+    tf = _RHO_TF_CACHE.get(t["documents"], t["documents"])
     vocab = tf.select("term").distinct().agg(F.count(F.lit(1)).alias("v"))
     ct_tr = (
         tf.filter(~F.col("holdout"))

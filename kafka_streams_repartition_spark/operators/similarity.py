@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.caching import count_memo, release_local_checkpoint
+from ..functions.caching import MemoSlots, release_local_checkpoint
 from ..functions.frames import local_frame
 from ..functions.hashing import hex_sign
 # hot scan paths use ONLY the unrolled forms: the HOF dot/norm evaluate
@@ -105,28 +105,25 @@ def _ann_qcap_sql() -> str:
     )
 
 
-# identity-keyed memo of the raw embeddings frame's row count (the
-# MemoSlots discipline, scalar-valued): the cap derivation needs ONE
-# count of the raw table per distinct frame — the stored key reference
-# keeps the frame alive while resident so its id cannot be reused
-from collections import OrderedDict as _OrderedDict
+def _row_count(df: DataFrame) -> int:
+    return df.count()
 
-_NVEC_MEMO: "_OrderedDict[int, tuple[DataFrame, int]]" = _OrderedDict()
+
+def _qsubset_count(emb_raw: DataFrame) -> int:
+    return emb_raw.filter(F.col("vec_id") % QUERY_MOD == 0).count()
+
+
+# the raw embeddings frame's row count, memoized per frame: the cap
+# derivation needs ONE count of the raw table per distinct frame
+_NVEC_MEMO = MemoSlots("similarity.n_vecs", _row_count, (), 8)
+# the natural ``% QUERY_MOD`` query subset's size, per raw frame
+_QSUBSET_MEMO = MemoSlots(
+    "similarity.qsubset_n", _qsubset_count, ("QUERY_MOD",), 8
+)
 
 
 def _n_vecs(emb_raw: DataFrame) -> int:
-    k = id(emb_raw)
-    hit = _NVEC_MEMO.get(k)
-    if hit is not None:
-        count_memo(True)
-        _NVEC_MEMO.move_to_end(k)
-        return hit[1]
-    count_memo(False)
-    n = emb_raw.count()
-    _NVEC_MEMO[k] = (emb_raw, n)
-    while len(_NVEC_MEMO) > 8:
-        _NVEC_MEMO.popitem(last=False)
-    return n
+    return _NVEC_MEMO.get(emb_raw, emb_raw)
 
 
 def _ann_qcap(t: dict[str, DataFrame]) -> int:
@@ -134,29 +131,15 @@ def _ann_qcap(t: dict[str, DataFrame]) -> int:
     return derived_ann_query_cap(_n_vecs(t["embeddings"]))
 
 
-_QSUBSET_MEMO: "_OrderedDict[int, tuple[DataFrame, int]]" = _OrderedDict()
-
-
 def _qsubset_n(emb_raw: DataFrame) -> int:
     """Size of the natural ``% QUERY_MOD`` query subset, memoized per
-    raw embeddings frame (the ``_n_vecs`` discipline).  Two capped
-    query lists over the same corpus are IDENTICAL iff
-    ``min(subset_n, cap_a) == min(subset_n, cap_b)`` (both are "the
-    cap lowest vec_ids of the subset"), so this one tiny count is what
-    lets a consumer prove its query list equals the memoized truth
-    set's before sharing it (see :func:`mrl_recall_curve`)."""
-    k = id(emb_raw)
-    hit = _QSUBSET_MEMO.get(k)
-    if hit is not None:
-        count_memo(True)
-        _QSUBSET_MEMO.move_to_end(k)
-        return hit[1]
-    count_memo(False)
-    n = emb_raw.filter(F.col("vec_id") % QUERY_MOD == 0).count()
-    _QSUBSET_MEMO[k] = (emb_raw, n)
-    while len(_QSUBSET_MEMO) > 8:
-        _QSUBSET_MEMO.popitem(last=False)
-    return n
+    raw embeddings frame.  Two capped query lists over the same corpus
+    are IDENTICAL iff ``min(subset_n, cap_a) == min(subset_n, cap_b)``
+    (both are "the cap lowest vec_ids of the subset"), so this one tiny
+    count is what lets a consumer prove its query list equals the
+    memoized truth set's before sharing it (see
+    :func:`mrl_recall_curve`)."""
+    return _QSUBSET_MEMO.get(emb_raw, emb_raw)
 
 
 def _corpus(t: dict[str, DataFrame]) -> DataFrame:
@@ -458,14 +441,16 @@ def kmeans_cells(t: dict[str, DataFrame]) -> DataFrame:
     trainer — together they close the IVF index lifecycle.
 
     As the declared PRODUCER query it always trains fresh
-    (``_kmeans_train_uncached``), never consulting ``_KMEANS_MEMO``:
-    its bench row must measure Lloyd training, not a memo lookup.
-    Consumers share the trained model via :func:`kmeans_model`.
+    (``_kmeans_train_uncached``), never reading ``_KMEANS_MEMO``: its
+    bench row must measure Lloyd training, not a memo lookup.  It then
+    writes the trained table into the memo, so the consumers that share
+    the model via :func:`kmeans_model` do not train it a second time.
     """
     emb = fan_out(t["embeddings"]).select(
         "vec_id", to_double_array("embedding").alias("v")
     )
     schema, rows = _kmeans_train_uncached(t)
+    _KMEANS_MEMO.put(t["embeddings"], (schema, rows))
     cents = _cents_frame(emb.sparkSession, schema, rows)
     return _assign_cells(emb, cents).select("vec_id", "cell")
 
@@ -477,45 +462,21 @@ def kmeans_model(t: dict[str, DataFrame]) -> tuple[DataFrame, DataFrame]:
     exactly the centroids the batch trainer converged to).
 
     The TRAINED centroid table memoizes per embeddings frame as plain
-    collected rows (the ``_kcenter_centers`` discipline — k × DIM
-    doubles, kilobytes at any corpus size, no checkpoint blocks to
-    release): ~10 registry queries consume the same quantizer
-    (purity/silhouette/balance diagnostics, semdedup and its gates,
-    D4, cluster_sample), and retraining the identical Lloyd loop per
-    consumer was 2 full corpus passes each that the frozen-model
-    artifact makes one map-side assignment instead.  Assignment is
+    collected rows (k × DIM doubles, kilobytes at any corpus size, no
+    checkpoint blocks to release): ~10 registry queries consume the
+    same quantizer (purity/silhouette/balance diagnostics, semdedup and
+    its gates, D4, cluster_sample), and retraining the identical Lloyd
+    loop per consumer was 2 full corpus passes each that the
+    frozen-model artifact makes one map-side assignment instead.  Assignment is
     recomputed from the memoized centroids on every call — a
     deterministic zero-shuffle map pass — so the output is
     bit-identical to training in-line."""
     emb_raw = fan_out(t["embeddings"])
     emb = emb_raw.select("vec_id", to_double_array("embedding").alias("v"))
     spark = emb.sparkSession
-    schema, rows = _kmeans_cent_rows(t)
+    schema, rows = _KMEANS_MEMO.get(t["embeddings"], t)
     assign = _assign_cells(emb, _cents_frame(spark, schema, rows))
     return assign.select("vec_id", "cell"), local_frame(spark, rows, schema)
-
-
-_KMEANS_MEMO: "_OrderedDict[int, tuple[DataFrame, tuple]]" = _OrderedDict()
-
-
-def _kmeans_cent_rows(t: dict[str, DataFrame]):
-    """(schema, rows) of the trained Lloyd centroid table, memoized
-    identity-keyed on the loader-memoized embeddings frame; the
-    iteration budget and dimensionality ride the key so a runtime
-    override can never serve a model trained under the old values."""
-    key = t["embeddings"]
-    k = (id(key), KMEANS_ITER, DIM)
-    hit = _KMEANS_MEMO.get(k)
-    if hit is not None:
-        count_memo(True)
-        _KMEANS_MEMO.move_to_end(k)
-        return hit[1]
-    count_memo(False)
-    out = _kmeans_train_uncached(t)
-    _KMEANS_MEMO[k] = (key, out)
-    while len(_KMEANS_MEMO) > 4:
-        _KMEANS_MEMO.popitem(last=False)
-    return out
 
 
 def _kmeans_train_uncached(t: dict[str, DataFrame]):
@@ -538,6 +499,17 @@ def _kmeans_train_uncached(t: dict[str, DataFrame]):
         assign = _assign_cells(emb, _cents_frame(spark, schema, rows))
         schema, rows = vector_means(assign, "cell", "v", DIM)
     return schema, rows
+
+
+# the trained Lloyd centroid table (schema, rows), memoized per
+# embeddings frame: written by the producer kmeans_cells, read by
+# kmeans_model's consumers
+_KMEANS_MEMO = MemoSlots(
+    "similarity.kmeans_centroids",
+    _kmeans_train_uncached,
+    ("DIM", "KMEANS_ITER"),
+    4,
+)
 
 
 def _kmeans_oracle() -> str:
@@ -867,11 +839,11 @@ def _centroids(emb_raw: DataFrame):
     + 2·DIM buffer fields — past ``spark.sql.codegen.maxFields`` (100),
     so its ``HashAggregate`` ran outside whole-stage codegen (503 ms of
     task time, 370 ms CPU, for 500 rows on a 4-core host)."""
-    emb = emb_raw.select("label", to_double_array("embedding").alias("v"))
+    emb = fan_out(emb_raw).select("label", to_double_array("embedding").alias("v"))
     return vector_means(emb, "label", "v", DIM)
 
 
-_LCENT_MEMO: "_OrderedDict[int, tuple[DataFrame, tuple]]" = _OrderedDict()
+_LCENT_MEMO = MemoSlots("similarity.label_centroids", _centroids, ("DIM",), 4)
 
 
 def _label_centroid_rows(t: dict[str, DataFrame]):
@@ -879,21 +851,8 @@ def _label_centroid_rows(t: dict[str, DataFrame]):
     collected rows (k × DIM doubles — the "pre-trained coarse quantizer
     a production IVF index would LOAD"): six index ops consume the
     identical table and each previously re-ran the corpus aggregation
-    to rebuild it.  DIM rides the key (the seed table is per-dimension
-    positional averages)."""
-    key = t["embeddings"]
-    k = (id(key), DIM)
-    hit = _LCENT_MEMO.get(k)
-    if hit is not None:
-        count_memo(True)
-        _LCENT_MEMO.move_to_end(k)
-        return hit[1]
-    count_memo(False)
-    out = _centroids(fan_out(key))
-    _LCENT_MEMO[k] = (key, out)
-    while len(_LCENT_MEMO) > 4:
-        _LCENT_MEMO.popitem(last=False)
-    return out
+    to rebuild it."""
+    return _LCENT_MEMO.get(t["embeddings"], t["embeddings"])
 
 
 def _label_centroids(t: dict[str, DataFrame]) -> DataFrame:
@@ -1693,37 +1652,40 @@ WHERE rank <= {TOP_K}
 ANN_TOPK_IVFPQ_RESIDUAL_ORACLE = _ivfpq_residual_oracle(N_PROBE, RPQ_K)
 
 
-_BF_TRUTH_MEMO: "_OrderedDict[int, tuple[DataFrame, tuple]]" = _OrderedDict()
+def _bf_truth_rows(t: dict[str, DataFrame]):
+    truth = ann_topk_bruteforce(t).select("query_id", "cand_id")
+    return truth.schema, truth.collect()
+
+
+# the effective query cap's inputs ride the key (ANN_QUERY_CAP may be
+# None: the cap then derives from corpus size)
+_ANN_QCAP_CONSTS = (
+    "ANN_QCAP_MAX",
+    "ANN_QCAP_MIN",
+    "ANN_QUERY_CAP",
+    "ANN_WORK_BUDGET",
+    "QUERY_MOD",
+)
+_BF_TRUTH_MEMO = MemoSlots(
+    "similarity.bf_truth",
+    _bf_truth_rows,
+    (*_ANN_QCAP_CONSTS, "DIM", "TOP_K"),
+    4,
+)
 
 
 def _bf_truth(t: dict[str, DataFrame]) -> DataFrame:
     """The brute-force (query_id, cand_id) truth ranking every ANN
     acceptance gate in this module scores against, memoized per
-    embeddings frame as plain collected rows (the ``_kcenter_centers``
-    / ``_mmr_pool_pairs`` discipline): the truth set is ≤ cap × TOP_K
-    id pairs (a k-bounded collect at any corpus size, ~40k rows worst
-    case), and SEVEN gates (lsh/pq/sq/ivfpq/residual recalls, the
+    embeddings frame as plain collected rows: the truth set is ≤ cap ×
+    TOP_K id pairs (a k-bounded collect at any corpus size, ~40k rows
+    worst case), and SEVEN gates (lsh/pq/sq/ivfpq/residual recalls, the
     recall eval, the MRL gate) plus the design table each re-ran the
     full Q·N brute scan to rebuild the identical artifact.  The
     declared ``ann_topk_bruteforce`` query itself never consults the
-    memo — it always computes fresh from the scan.  The key carries
-    the EFFECTIVE query cap so a runtime ``ANN_QUERY_CAP`` override
-    (monkeypatched or env) can never serve a stale truth set."""
-    key = t["embeddings"]
-    k = (id(key), _ann_qcap(t))
-    hit = _BF_TRUTH_MEMO.get(k)
-    if hit is not None:
-        count_memo(True)
-        _BF_TRUTH_MEMO.move_to_end(k)
-        schema, rows = hit[1]
-    else:
-        count_memo(False)
-        truth = ann_topk_bruteforce(t).select("query_id", "cand_id")
-        schema, rows = truth.schema, truth.collect()
-        _BF_TRUTH_MEMO[k] = (key, (schema, rows))
-        while len(_BF_TRUTH_MEMO) > 4:
-            _BF_TRUTH_MEMO.popitem(last=False)
-    return local_frame(key.sparkSession, rows, schema)
+    memo — it always computes fresh from the scan."""
+    schema, rows = _BF_TRUTH_MEMO.get(t["embeddings"], t)
+    return local_frame(t["embeddings"].sparkSession, rows, schema)
 
 
 def _recall_one_row(truth: DataFrame, approx: DataFrame) -> DataFrame:
@@ -3854,18 +3816,6 @@ def _kc_dist_to(v_lit: list[float], nrm: float) -> F.Column:
     return F.round(F.lit(1.0) - cos, 6)
 
 
-# identity-keyed memo of the selection loop's k center rows, keyed on
-# the raw embeddings frame (the loader memoizes that per (session,
-# sf_dir), the _LOGREG_CACHE discipline): kcenter_select and
-# kcenter_coverage share the SAME k−1 driver-synchronous rounds, and
-# before this memo coverage re-ran the whole loop it had just watched
-# select run — 2×(k−1) rounds per bench sweep, 18.3 s median at sf0.1
-# with a 11.5–34.2 s spread (VERDICT r11 item 3).  The value is k
-# plain Python tuples (≤ k × DIM floats), not a frame — nothing to
-# unpersist on eviction.
-_KCENTER_MEMO: "_OrderedDict[int, tuple[DataFrame, list]]" = _OrderedDict()
-
-
 def _kcenter_centers(
     t: dict[str, DataFrame],
 ) -> list[tuple[int, int, float, list[float], float]]:
@@ -3874,19 +3824,7 @@ def _kcenter_centers(
     per selected center — k driver rows total, the bounded collect.
     Memoized per embeddings frame so the coverage histogram costs one
     corpus scan, not a second selection loop."""
-    key = t["embeddings"]
-    k = id(key)
-    hit = _KCENTER_MEMO.get(k)
-    if hit is not None:
-        count_memo(True)
-        _KCENTER_MEMO.move_to_end(k)
-        return hit[1]
-    count_memo(False)
-    out = _kcenter_centers_uncached(t)
-    _KCENTER_MEMO[k] = (key, out)
-    while len(_KCENTER_MEMO) > 4:
-        _KCENTER_MEMO.popitem(last=False)
-    return out
+    return _KCENTER_MEMO.get(t["embeddings"], t)
 
 
 def _kcenter_centers_uncached(
@@ -3931,6 +3869,20 @@ def _kcenter_centers_uncached(
         cur = nxt
     release_local_checkpoint(cur)
     return out
+
+
+# the selection loop's k center rows per embeddings frame:
+# kcenter_select and kcenter_coverage share the SAME k−1
+# driver-synchronous rounds, and before this memo coverage re-ran the
+# whole loop it had just watched select run — 2×(k−1) rounds per bench
+# sweep, 18.3 s median at sf0.1 with a 11.5–34.2 s spread.  The value
+# is k plain Python tuples (≤ k × DIM floats), not a frame.
+_KCENTER_MEMO = MemoSlots(
+    "similarity.kcenter_centers",
+    _kcenter_centers_uncached,
+    ("DIM", "KCENTER_K"),
+    4,
+)
 
 
 def _kcenter_oracle() -> str:
@@ -4192,14 +4144,6 @@ MMR_K = 5       # diversified picks per query
 MMR_LAMBDA = 0.7  # relevance weight; 1-λ penalizes similarity to picks
 
 
-# identity-keyed memo on the loader-memoized embeddings frame (the
-# _kcenter_centers discipline): the gate calls mmr_rerank on the same
-# corpus it builds its own pool for — without the memo the bounded
-# shortlist scan and the |Q|·POOL² pair build ran TWICE per gate
-# invocation (isolated sf0.1 median 27.9 s pre-memo)
-_MMR_MEMO: "_OrderedDict[int, tuple[DataFrame, tuple]]" = _OrderedDict()
-
-
 def _mmr_pool_pairs(t: dict[str, DataFrame]) -> tuple[DataFrame, DataFrame]:
     """(pool, pairs) shared by :func:`mmr_rerank` and its gate: each
     capped query's top-``MMR_POOL`` relevance shortlist, and the
@@ -4207,23 +4151,7 @@ def _mmr_pool_pairs(t: dict[str, DataFrame]) -> tuple[DataFrame, DataFrame]:
     Both localCheckpoint so the greedy rounds' plans stay flat; the
     pair memoizes per embeddings frame so the gate's two consumers
     share one build."""
-    key = t["embeddings"]
-    k = id(key)
-    hit = _MMR_MEMO.get(k)
-    if hit is not None:
-        count_memo(True)
-        _MMR_MEMO.move_to_end(k)
-        return hit[1]
-    count_memo(False)
-    out = _mmr_pool_pairs_uncached(t)
-    _MMR_MEMO[k] = (key, out)
-    while len(_MMR_MEMO) > 2:
-        # release the evicted entry's checkpoint blocks eagerly (the
-        # MemoSlots discipline) instead of waiting for JVM-side GC
-        _, (_, evicted) = _MMR_MEMO.popitem(last=False)
-        for frame in evicted:
-            release_local_checkpoint(frame)
-    return out
+    return _MMR_MEMO.get(t["embeddings"], t)
 
 
 def _mmr_pool_pairs_uncached(
@@ -4277,6 +4205,19 @@ def _mmr_pool_pairs_uncached(
         .localCheckpoint(eager=False)
     )
     return pool, pairs
+
+
+# the (pool, pairs) checkpoint frames per embeddings frame: the gate
+# calls mmr_rerank on the same corpus it builds its own pool for —
+# without the memo the bounded shortlist scan and the |Q|·POOL² pair
+# build ran TWICE per gate invocation (isolated sf0.1 median 27.9 s
+# pre-memo).  Eviction releases both frames' checkpoint blocks.
+_MMR_MEMO = MemoSlots(
+    "similarity.mmr_pool_pairs",
+    _mmr_pool_pairs_uncached,
+    (*_ANN_QCAP_CONSTS, "DIM", "MMR_POOL"),
+    2,
+)
 
 
 def mmr_rerank(t: dict[str, DataFrame]) -> DataFrame:

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.caching import MemoSlots
 from ..functions.text import word_ngrams, words
 from ..sources.tables import fan_out
 
@@ -1026,38 +1027,8 @@ _BPE_O = "\x1e"
 _BPE_C = "\x1f"
 
 
-# the collected (lhs, rhs) merge list of the trained BPE tokenizer,
-# memoized per documents frame (the frozen-model discipline of
-# similarity._kcenter_centers: K tiny driver rows): bpe_encode and
-# tokenizer_fertility each re-ran the full K-round trainer to rebuild
-# the identical table.  The declared bpe_train_merges query itself
-# never consults the memo.
-from collections import OrderedDict as _OrderedDict  # noqa: E402
-
-_BPE_MERGES_MEMO: "_OrderedDict[int, tuple[DataFrame, list]]" = _OrderedDict()
-
-
 def _bpe_merges(t: dict[str, DataFrame]) -> list[tuple[str, str]]:
-    from ..functions.caching import count_memo
-
-    key = t["documents"]
-    # merge budget rides the key: a runtime BPE_MERGE_ROUNDS override
-    # can never serve a tokenizer trained under the old budget
-    k = (id(key), BPE_MERGE_ROUNDS)
-    hit = _BPE_MERGES_MEMO.get(k)
-    if hit is not None:
-        count_memo(True)
-        _BPE_MERGES_MEMO.move_to_end(k)
-        return hit[1]
-    count_memo(False)
-    out = [
-        (r["lhs"], r["rhs"])
-        for r in bpe_train_merges(t).orderBy("round").collect()
-    ]
-    _BPE_MERGES_MEMO[k] = (key, out)
-    while len(_BPE_MERGES_MEMO) > 4:
-        _BPE_MERGES_MEMO.popitem(last=False)
-    return out
+    return _BPE_MERGES_MEMO.get(t["documents"], t)
 
 
 def bpe_train_merges(t: dict[str, DataFrame]) -> DataFrame:
@@ -1151,6 +1122,23 @@ def bpe_train_merges(t: dict[str, DataFrame]) -> DataFrame:
     return spark.createDataFrame(
         merges, "round int, lhs string, rhs string, merged string, n long"
     )
+
+
+def _bpe_merge_list(t: dict[str, DataFrame]) -> list[tuple[str, str]]:
+    return [
+        (r["lhs"], r["rhs"])
+        for r in bpe_train_merges(t).orderBy("round").collect()
+    ]
+
+
+# the collected (lhs, rhs) merge list of the trained BPE tokenizer,
+# memoized per documents frame (K tiny driver rows): bpe_encode and
+# tokenizer_fertility each re-ran the full K-round trainer to rebuild
+# the identical table.  The declared bpe_train_merges query itself
+# never consults the memo.
+_BPE_MERGES_MEMO = MemoSlots(
+    "text_analysis.bpe_merges", _bpe_merge_list, ("BPE_MERGE_ROUNDS",), 4
+)
 
 
 def _bpe_train_oracle() -> str:

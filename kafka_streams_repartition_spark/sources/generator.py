@@ -2,15 +2,16 @@
 ``publisher/.../Producer.java:84-138``).
 
 The reference's publisher emits one random order per second in a Kafka
-transaction. Spark-first: the ``rate`` source ticks rows, and pure
-column expressions derive deterministic-per-tick pseudo-random order
-fields (xxhash64 of the tick value as the entropy source), so the
-stream is reproducible given the tick sequence — no Python in the loop.
+transaction. Spark-first: any tick source (the ``rate`` source, a
+socket stream, a batch ``range``) supplies rows, and pure column
+expressions derive deterministic-per-tick pseudo-random order fields
+(xxhash64 of the tick value as the entropy source), so the stream is
+reproducible given the tick sequence — no Python in the loop.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 N_USERS = 10_000
@@ -24,22 +25,11 @@ def _h(seed: int) -> F.Column:
     return F.abs(F.xxhash64(F.col("value"), F.lit(seed)))
 
 
-def purchase_order_stream(
-    spark: SparkSession, rows_per_second: int = 1
-) -> DataFrame:
-    """Rate-source stream shaped like PURCHASE_ORDER_SCHEMA (prices
-    null — the product join fills them, ``Producer.java:97``)."""
-    rate = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-    )
-    return derive_purchase_orders(rate)
-
-
 def derive_purchase_orders(ticks: DataFrame) -> DataFrame:
-    """Pure column derivation over a (timestamp, value) tick frame —
-    shared by the streaming rate source and batch/range testing."""
+    """Orders shaped like PURCHASE_ORDER_SCHEMA (prices null — the
+    product join fills them, ``Producer.java:97``), derived by pure
+    column expressions over a (timestamp, value) tick frame, streaming
+    or batch."""
     n_items = (_h(0) % MAX_ITEMS + 1).cast("int")
     items = F.transform(
         F.sequence(F.lit(1), n_items),

@@ -11,8 +11,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from kafka_streams_repartition_spark.operators import (
+    analytics as an,
     dedup as dd,
     graph as gr,
+    selection as sl,
+    similarity as sim,
     sketches as sk,
     text_analysis as tx,
     windows as win,
@@ -545,14 +548,17 @@ def test_memo_slots_bounded_and_unpersist_on_eviction(spark):
     session)."""
     from kafka_streams_repartition_spark.functions.caching import MemoSlots
 
-    slots = MemoSlots(capacity=2)
+    def times(k, m):
+        return k.selectExpr(f"id * {m} AS x")
+
+    slots = MemoSlots("tests.slots_eviction", times, (), 2)
     k1, k2, k3 = (spark.range(n + 3) for n in range(3))
-    b1 = slots.get_or_build(k1, lambda: k1.selectExpr("id * 2 AS x"))
+    b1 = slots.get(k1, k1, 2)
     assert b1.is_cached
-    assert slots.get_or_build(k1, lambda: 1 / 0) is b1  # memo hit
-    b2 = slots.get_or_build(k2, lambda: k2.selectExpr("id * 3 AS x"))
+    assert slots.get(k1, None, None) is b1  # memo hit: build not called
+    b2 = slots.get(k2, k2, 3)
     assert b1.is_cached and b2.is_cached  # both resident at capacity 2
-    b3 = slots.get_or_build(k3, lambda: k3.selectExpr("id * 4 AS x"))
+    b3 = slots.get(k3, k3, 4)
     assert not b1.is_cached  # LRU evicted AND unpersisted
     assert b2.is_cached and b3.is_cached
     assert len(slots) == 2
@@ -1886,16 +1892,17 @@ def test_repeated_ngram_summary_consistent_with_scan(t):
 
 
 def test_mmr_memo_eviction_releases_checkpoints(spark, monkeypatch):
-    """Round-13 advisor guard: _MMR_MEMO eviction releases BOTH of the
-    evicted entry's localCheckpoint frames eagerly (the MemoSlots
-    discipline) instead of leaving the blocks to JVM-side GC."""
+    """_MMR_MEMO eviction releases BOTH of the evicted entry's
+    localCheckpoint frames eagerly instead of leaving the blocks to
+    JVM-side GC."""
+    from kafka_streams_repartition_spark.functions import caching
     from kafka_streams_repartition_spark.operators import similarity as sim
 
+    sim._MMR_MEMO.clear()
     released = []
     monkeypatch.setattr(
-        sim, "release_local_checkpoint", lambda df: released.append(df)
+        caching, "release_local_checkpoint", lambda df: released.append(df)
     )
-    monkeypatch.setattr(sim, "_MMR_MEMO", type(sim._MMR_MEMO)())
 
     def frames(seed):
         return {
@@ -2211,3 +2218,329 @@ def test_kmeans_cells_warm_job_budget(spark, t):
     j0 = dag.nextJobId()
     run()
     assert dag.nextJobId() - j0 <= 11
+
+
+# --- session memos and output-invariant rewrites ------------------------------
+# Each memo or rewrite may change where work happens (memoized model
+# artifacts, shared gram frames, scalar-literal unrolls, probe-superset
+# sharing, single-pass aggregations), never what any query computes.
+
+
+def _rows(df, cols=None):
+    cols = cols or sorted(df.columns)
+    return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+def _consts_read(build):
+    """Public UPPER_CASE module constants read by ``build``: its code,
+    nested code (lambdas, inner functions), the same-module functions
+    it calls, transitively, and the builds of the memos it consults."""
+    import dis
+    import types
+
+    from kafka_streams_repartition_spark.functions.caching import MemoSlots
+
+    g, mod = build.__globals__, build.__module__
+    seen, found, todo = set(), set(), [build.__code__]
+    while todo:
+        code = todo.pop()
+        if code in seen:
+            continue
+        seen.add(code)
+        todo.extend(c for c in code.co_consts if isinstance(c, types.CodeType))
+        for ins in dis.get_instructions(code):
+            if ins.opname not in ("LOAD_GLOBAL", "LOAD_NAME") or ins.argval not in g:
+                continue
+            name, val = ins.argval, g[ins.argval]
+            if isinstance(val, types.FunctionType) and val.__module__ == mod:
+                todo.append(val.__code__)
+            elif isinstance(val, MemoSlots):
+                todo.append(val.build.__code__)
+            elif (
+                name.isupper()
+                and not name.startswith("_")
+                and not callable(val)
+                and not isinstance(val, types.ModuleType)
+            ):
+                found.add(name)
+    return found
+
+
+def test_memo_keys_cover_module_constants():
+    """Every registered memo's key names every module constant its
+    build reads, including ``None``-valued ones such as
+    ``ANN_QUERY_CAP``: a constant left out of ``consts`` would let a
+    runtime override serve a value built under the old one."""
+    import __spark_entry__  # noqa: F401 — imports every operator module
+    from kafka_streams_repartition_spark.functions.caching import _REGISTRY
+
+    memos = {
+        name: m
+        for name, m in _REGISTRY.items()
+        if m.build.__module__.startswith("kafka_streams_repartition_spark.")
+    }
+    assert memos
+    missing = {
+        name: sorted(gap)
+        for name, m in memos.items()
+        if (gap := _consts_read(m.build) - set(m.consts))
+    }
+    assert not missing, missing
+    assert "ANN_QUERY_CAP" in _consts_read(sim._bf_truth_rows)
+
+
+def test_qsubset_n_key_carries_query_mod(t, monkeypatch):
+    """Overriding QUERY_MOD recounts the query subset instead of
+    serving the count taken under the old modulus."""
+    emb = t["embeddings"]
+    n100 = sim._qsubset_n(emb)
+    monkeypatch.setattr(sim, "QUERY_MOD", 7)
+    want = emb.filter(F.col("vec_id") % 7 == 0).count()
+    assert want != n100
+    assert sim._qsubset_n(emb) == want
+
+
+def test_doc_grams_key_carries_ngram_n(t, monkeypatch):
+    """Overriding NGRAM_N rebuilds the shared gram frame instead of
+    serving the 3-gram one."""
+    docs = t["documents"]
+    g3 = dd._doc_gram_arrays_cached(docs)
+    monkeypatch.setattr(dd, "NGRAM_N", 2)
+    g2 = dd._doc_gram_arrays_cached(docs)
+    assert g2 is not g3, "override served the stale gram frame"
+    assert _rows(g2) == _rows(dd._doc_gram_arrays(docs))
+    assert _rows(g2) != _rows(g3)
+
+
+def test_kmeans_memo_matches_fresh_training(t):
+    """kmeans_model's memoized centroid rows equal the fresh-training
+    producer (bit-exact doubles).  ALL upstream memos are cleared
+    first (leaving _LCENT_MEMO warm would let the "fresh" run read
+    memoized seed centroids, so a stale seed would escape this test),
+    and ``kmeans_cells`` always trains fresh (producer discipline), so
+    the comparison is memoized-model vs fresh-training by
+    construction."""
+    sim._KMEANS_MEMO.clear()
+    sim._LCENT_MEMO.clear()
+    sim._NVEC_MEMO.clear()
+    a1 = sim.kmeans_model(t)[0]  # trains, populates the memo
+    a2 = sim.kmeans_model(t)[0]  # memo hit
+    fresh = sim.kmeans_cells(t)  # always-fresh producer
+    assert _rows(a1) == _rows(fresh)
+    assert _rows(a2) == _rows(fresh)
+
+
+def test_bf_truth_matches_bruteforce(t):
+    """_bf_truth serves exactly ann_topk_bruteforce's (query, cand)
+    pairs — the gates' memoized truth is the declared query's answer."""
+    sim._BF_TRUTH_MEMO.clear()
+    want = _rows(sim.ann_topk_bruteforce(t).select("query_id", "cand_id"))
+    got = _rows(sim._bf_truth(t))
+    assert got == want
+    assert _rows(sim._bf_truth(t)) == want  # memo hit
+
+
+def test_embdup_truth_matches_inline(t):
+    """_embdup_truth_pairs equals the inline lo/hi distinct pair set."""
+    dd._EMBDUP_TRUTH_CACHE.clear()
+    want = _rows(
+        dd.dedup_embedding(t)
+        .select(
+            F.least("query_id", "cand_id").alias("lo"),
+            F.greatest("query_id", "cand_id").alias("hi"),
+        )
+        .distinct()
+    )
+    assert _rows(dd._embdup_truth_pairs(t)) == want
+
+
+def test_bpe_merges_memo_matches_trainer(t):
+    """_bpe_merges equals the (lhs, rhs) sequence of the declared
+    trainer query, in round order."""
+    tx._BPE_MERGES_MEMO.clear()
+    want = [
+        (r["lhs"], r["rhs"])
+        for r in tx.bpe_train_merges(t).orderBy("round").collect()
+    ]
+    assert tx._bpe_merges(t) == want
+
+
+def test_dot_literal_bit_equals_array_form(spark):
+    """dot_literal reproduces dot_unrolled-against-a-literal-array
+    bit-for-bit (same left-associated order, same IEEE doubles)."""
+    from kafka_streams_repartition_spark.functions.vectors import (
+        dot_literal,
+        dot_unrolled,
+    )
+
+    vals = [0.1 * i - 1.7 for i in range(16)]
+    df = spark.createDataFrame(
+        [([(0.3 * i + 0.01) * (-1) ** i for i in range(16)],)], "v array<double>"
+    )
+    lit_arr = F.array(*[F.lit(float(x)) for x in vals])
+    out = df.select(
+        dot_unrolled(F.col("v"), lit_arr, 16).alias("a"),
+        dot_literal(F.col("v"), vals).alias("b"),
+    ).collect()[0]
+    assert out["a"] == out["b"]
+
+
+def test_rpq_probe_superset_filter_equals_direct_topk(t):
+    """ivfpq_design_table's probe-superset sharing is exact: ranking
+    the max-probe ADC frame filtered to prn <= p equals running the
+    production pipeline (_rpq_topk) directly at n_probe = p."""
+    emb, cent, cells, rsub = sim._rpq_shared(t)
+    cb1, codes = sim._rpq_codebook(rsub, 8)
+    qcap = sim._ann_qcap(t)
+    adc4 = sim._rpq_adc(emb, cent, cells, cb1, codes, 4, qcap)
+    for p in (1, 2):
+        want = _rows(sim._rpq_topk(emb, cent, cells, cb1, codes, p, qcap))
+        got = _rows(sim._rpq_rank(adc4.filter(F.col("prn") <= p)))
+        assert got == want, f"n_probe={p} superset cut diverged"
+
+
+def test_kmeans_cells_producer_never_consults_memo(t):
+    """The declared producer trains fresh: running kmeans_cells with a
+    cold memo counts no lookup of the model memo (its bench row
+    measures Lloyd training, never a hit), but it writes the trained
+    model, so the next kmeans_model call is a hit and its assignment
+    equals the producer's output."""
+    from kafka_streams_repartition_spark.functions.caching import memo_traffic
+
+    name = sim._KMEANS_MEMO.name
+    sim._KMEANS_MEMO.clear()
+    hits, misses = memo_traffic()[name]
+    fresh = _rows(sim.kmeans_cells(t))
+    assert memo_traffic()[name] == (hits, misses), "producer read the memo"
+    model = _rows(sim.kmeans_model(t)[0])
+    assert memo_traffic()[name] == (hits + 1, misses), "model retrained"
+    assert fresh == model
+
+
+def test_mrl_curve_shared_truth_equals_fresh_truth(t):
+    """mrl_recall_curve's memoized-truth fast path (d = DIM leg served
+    from _bf_truth) is bit-identical to building the truth leg fresh
+    from _truncated_topk — the unshared shape, reconstructed inline."""
+    qcap = sim.derived_mrl_query_cap(sim._n_vecs(t["embeddings"]))
+    truth = sim._truncated_topk(t, sim.DIM, qcap).localCheckpoint(
+        eager=False
+    )
+    legs = []
+    for d in sim.MRL_DIMS:
+        if d == sim.DIM:
+            legs.append(
+                truth.agg(
+                    F.count(F.lit(1)).cast("long").alias("n_truth")
+                ).select(
+                    F.lit(d).cast("long").alias("dims"),
+                    "n_truth",
+                    F.col("n_truth").alias("n_approx"),
+                    F.col("n_truth").alias("n_hits"),
+                    F.round(F.lit(1.0), 4).alias("recall"),
+                )
+            )
+            continue
+        approx = sim._truncated_topk(t, d, qcap)
+        legs.append(
+            sim._recall_one_row(truth, approx).select(
+                F.lit(d).cast("long").alias("dims"),
+                "n_truth",
+                "n_approx",
+                "n_hits",
+                "recall",
+            )
+        )
+    want = legs[0]
+    for leg in legs[1:]:
+        want = want.unionByName(leg)
+    sim._BF_TRUTH_MEMO.clear()
+    got = sim.mrl_recall_curve(t)
+    assert _rows(got) == _rows(want)
+    # warm-memo second run still identical
+    assert _rows(sim.mrl_recall_curve(t)) == _rows(want)
+
+
+def test_rns_cache_key_carries_gram_order(t, monkeypatch):
+    """_rns_dg's slot key carries RNS_NGRAM: overriding the gram order
+    builds a fresh pair frame instead of serving the 13-gram one."""
+    dd._RNS_DG_CACHE.clear()
+    g13 = dd._rns_dg(t)
+    monkeypatch.setattr(dd, "RNS_NGRAM", 5)
+    g5 = dd._rns_dg(t)
+    assert g5 is not g13, "override served the stale gram frame"
+    # 5-grams are strictly more plentiful than 13-grams on this corpus
+    assert g5.count() > g13.count()
+
+
+def test_repeated_ngram_scan_fused_agg_matches_join_shape(t):
+    """The fused one-aggregation scan equals the two-frame join shape (base ⋈ per-doc-repeated), reconstructed inline from
+    the same shared pair frame."""
+    dg = dd._rns_dg(t)
+    rep = (
+        dg.groupBy("gh")
+        .agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
+        .filter(F.col("lo") != F.col("hi"))
+        .select("gh")
+    )
+    pd_ = (
+        dg.join(rep, "gh")
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_repeated"))
+    )
+    base = dg.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_grams")
+    )
+    want = base.join(pd_, "doc_id", "left").select(
+        "doc_id",
+        "n_grams",
+        F.coalesce(F.col("n_repeated"), F.lit(0))
+        .cast("long")
+        .alias("n_repeated"),
+        F.round(
+            F.coalesce(F.col("n_repeated"), F.lit(0)) / F.col("n_grams"),
+            6,
+        ).alias("repeated_frac"),
+    )
+    assert _rows(dd.repeated_ngram_scan(t)) == _rows(want)
+
+
+def test_table_profile_approx_single_pass_matches_two_pass(t):
+    """The single-aggregation approx profile equals the checkpoint +
+    join shape, reconstructed inline from the same
+    register frame."""
+    from kafka_streams_repartition_spark.operators.sketches import (
+        _hll_estimate,
+    )
+
+    regs = an._profile_approx_regs(t).localCheckpoint(eager=False)
+    exact = regs.groupBy("column_name").agg(
+        F.sum("n_vals").alias("n_distinct_exact")
+    )
+    rel_err = F.round(
+        F.abs(F.col("hll_estimate") - F.col("n_distinct_exact"))
+        / F.col("n_distinct_exact"),
+        4,
+    )
+    want = (
+        _hll_estimate(regs, "column_name")
+        .join(exact, "column_name")
+        .select(
+            "column_name",
+            "n_distinct_exact",
+            "hll_estimate",
+            rel_err.alias("rel_err"),
+            (rel_err <= an.HLL_PROFILE_BOUND).alias("within_bound"),
+        )
+    )
+    assert _rows(an.table_profile_approx(t)) == _rows(want)
+
+
+def test_quality_logreg_deterministic_and_cache_faithful(t):
+    """Two fresh trainings of the GD loop produce bit-identical scored
+    frames (every sum is exact DECIMAL and rounds re-synchronize at 12
+    decimals, so repartitioning/order cannot drift them), and the
+    shared consumer cache serves exactly the producer's rows."""
+    a = _rows(sl.quality_logreg(t))
+    b = _rows(sl.quality_logreg(t))
+    assert a == b
+    assert _rows(sl._quality_scored_cached(t)) == a
